@@ -26,13 +26,20 @@ Design deltas vs the reference (each deliberate, see SURVEY.md §4.3/§7):
 - ``mode="two_merge"`` reproduces the reference's exact two-transaction
   flow through ManagedTable.merge for API parity;
 - null-safe content hashes by default, ``compat_hash=True`` for the
-  reference's ``sha2(concat_ws(''))`` fingerprint (scd_handler.py:102).
+  reference's ``sha2(concat_ws(''))`` fingerprint (scd_handler.py:102);
+- ``upd_key`` never hashes ``effective_from_col`` / ``initial_eff_date_col``
+  (the reference hashes every non-key column when no column list is
+  given, so a reload whose only change is its load timestamp rewrites
+  every row as an SCD1 update).
 
-Scale: the only shuffle is the PK join (current-state x batch). At
-100 TB the current-state read is partition-pruned by the storage layer
-(Delta/Iceberg data skipping on record_status/effective_to stats once
-swapped in under ManagedTable), and the batch side is typically small
-enough for a broadcast, which AQE chooses at runtime.
+Scale: the single-commit apply is one dataflow with one shuffle per
+side. The target is hashed by PK once; a ``row_number`` window over
+that exchange flags each PK's top row, a full-outer PK join (joining
+batch rows to top rows only) reuses the same partitioning, and one
+``inline`` generator emits 1-2 rows per joined row. Nothing is
+checkpointed or unioned, so a small commit's cost is its plan plus one
+pass over the target. At 100 TB the target read is partition-pruned on
+PK-derived partitions (see ``apply_scd``).
 """
 
 from __future__ import annotations
@@ -122,9 +129,13 @@ def _stamp_incoming(df: DataFrame, cfg: ScdConfig, now: datetime) -> DataFrame:
     incoming batch, plus the helper ``initial_effective_from``."""
     select_cols = list(cfg.select_cols or [c for c in df.columns])
     select_cols = [c for c in select_cols if c not in SYSTEM_COLUMNS]
-    upd_cols = [
-        c for c in select_cols if c not in cfg.scd_cols and c not in cfg.pk_cols
-    ]
+    # The load-timestamp columns date a version; they are not content.
+    # Hashing them would turn every row of a re-sent snapshot into an
+    # SCD1 update.
+    not_content = set(cfg.scd_cols) | set(cfg.pk_cols) | {
+        cfg.effective_from_col, cfg.initial_eff_date_col
+    }
+    upd_cols = [c for c in select_cols if c not in not_content]
 
     now_lit = F.lit(now).cast("timestamp")
     eff_from = (
@@ -160,14 +171,19 @@ def _stamp_incoming(df: DataFrame, cfg: ScdConfig, now: datetime) -> DataFrame:
     return stamped
 
 
-def _split_current(target: DataFrame, cfg: ScdConfig) -> tuple[DataFrame, DataFrame]:
-    """(current row per PK, all other rows). Reference collapses with a
-    row_number window ordered by dw_inserted_at desc, effective_to desc
+def _top_row_window(cfg: ScdConfig):
+    """Newest row first per PK. Reference collapses with a row_number
+    window ordered by dw_inserted_at desc, effective_to desc
     (scd_handler.py:72-74)."""
-    w = Window.partitionBy(*cfg.pk_cols).orderBy(
+    return Window.partitionBy(*cfg.pk_cols).orderBy(
         F.col("dw_inserted_at").desc(),
         F.coalesce(F.col("effective_to"), F.lit("9999-12-31").cast("timestamp")).desc(),
     )
+
+
+def _split_current(target: DataFrame, cfg: ScdConfig) -> tuple[DataFrame, DataFrame]:
+    """(current row per PK, all other rows), for the two-merge flow."""
+    w = _top_row_window(cfg)
     # Both returned frames branch off this window; pin it so the
     # partition+rank shuffle runs once, not once per consumer (the
     # reference recomputes this subtree up to 4x, SURVEY.md §4.3).
@@ -307,93 +323,70 @@ def apply_scd(
         if part_pred is not None:
             target = target.filter(F.expr(part_pred))
 
-    current, historic = _split_current(target, cfg)
-
-    t = current.alias("t")
+    # One dataflow: rank the target once, join the batch on each PK's
+    # top row, and emit 1-2 rows per joined row from one generator. The
+    # window and the join both hash the target by PK, so they share one
+    # exchange; no checkpoint, no union.
+    t = target.withColumn(
+        "__top", F.row_number().over(_top_row_window(cfg)) == 1
+    ).alias("t")
     u = incoming.alias("u")
-    j = t.join(u, on=list(cfg.pk_cols), how="full_outer").select(
-        *cfg.pk_cols,
-        *[F.col(f"t.{c}").alias(f"t_{c}") for c in current.columns if c not in cfg.pk_cols],
-        *[F.col(f"u.{c}").alias(f"u_{c}") for c in incoming.columns if c not in cfg.pk_cols],
-        F.col("t.record_status").isNotNull().alias("__has_t"),
-        F.col("u.record_status").isNotNull().alias("__has_u"),
-    ).localCheckpoint(eager=False)
-
-    now_lit = F.lit(now).cast("timestamp")
-    scd_same = F.col("t_scd_key") == F.col("u_scd_key")
-    upd_same = F.col("t_upd_key") == F.col("u_upd_key")
+    on = F.col("t.__top")
+    for c in cfg.pk_cols:
+        on = on & (F.col(f"t.{c}") == F.col(f"u.{c}"))
+    j = t.join(u, on=on, how="full_outer")
 
     def tcol(c):
-        return F.col(f"t_{c}") if c not in cfg.pk_cols else F.col(c)
+        return F.col(f"t.{c}")
 
     def ucol(c):
-        return F.col(f"u_{c}") if c not in cfg.pk_cols else F.col(c)
+        return F.col(f"u.{c}")
 
-    # Row 1 per PK: the surviving "primary" row.
-    #   t only            -> t unchanged
-    #   u only            -> insert (effective_from = initial_effective_from)
-    #   both, scd ==, upd == -> t unchanged (duplicate no-op)
-    #   both, scd ==, upd != -> SCD1: business cols from u, keep
-    #                           t.dw_inserted_at / t.effective_from
-    #                           (reference merge excludes them, :38-41)
-    #   both, scd !=          -> close-out of t: 'I',
-    #                           effective_to = u.effective_from,
-    #                           dw_updated_at = now
-    only_t = F.col("__has_t") & ~F.col("__has_u")
-    only_u = F.col("__has_u") & ~F.col("__has_t")
-    dup = F.col("__has_t") & F.col("__has_u") & scd_same & upd_same
-    scd1 = F.col("__has_t") & F.col("__has_u") & scd_same & ~upd_same
-    scd2 = F.col("__has_t") & F.col("__has_u") & ~scd_same
-
-    def pick(c: str):
-        if c in cfg.pk_cols:
-            return F.col(c).alias(c)
-        if c == cfg.surrogate_col:
-            # Surviving versions keep their key; brand-new entities get
-            # null here and draw a fresh id below.
-            return F.when(only_u, F.lit(None).cast("long")).otherwise(
-                tcol(c)
-            ).alias(c)
-        if c == "record_status":
-            expr = (
-                F.when(only_t | dup, tcol(c))
-                .when(only_u, F.lit("A"))
-                .when(scd1, F.lit("A"))
-                .when(scd2, F.lit("I"))
-            )
-        elif c == "effective_from":
-            expr = (
-                F.when(only_t | dup | scd2, tcol(c))
-                .when(only_u, F.col("u_initial_effective_from"))
-                .when(scd1, tcol(c))
-            )
-        elif c == "effective_to":
-            expr = (
-                F.when(only_t | dup, tcol(c))
-                .when(only_u | scd1, F.lit(None).cast("timestamp"))
-                .when(scd2, F.col("u_effective_from"))
-            )
-        elif c == "dw_inserted_at":
-            expr = F.when(only_u, ucol(c)).otherwise(tcol(c))
-        elif c == "dw_updated_at":
-            expr = F.when(only_t | dup, tcol(c)).otherwise(now_lit)
-        else:  # business cols + scd_key/upd_key
-            expr = F.when(only_t | dup | scd2, tcol(c)).otherwise(ucol(c))
-        return expr.alias(c)
-
-    primary = j.select(*[pick(c) for c in out_cols])
-
-    # Row 2 (SCD2 only): the new active version from the batch.
-    scd2_new = j.filter(scd2).select(
-        *[
-            F.col(c).alias(c)
-            if c in cfg.pk_cols
-            else ucol(c).alias(c)
-            for c in out_cols
-        ]
+    now_lit = F.lit(now).cast("timestamp")
+    has_t = tcol("__top").isNotNull()
+    has_u = ucol("record_status").isNotNull()
+    # A batch row meets only its PK's top target row. It updates that
+    # row when the row is the open active version; otherwise (new PK,
+    # or the top row is closed / soft-deleted) the batch row is an
+    # insert with effective_from = initial_effective_from.
+    #   scd ==, upd ==  -> duplicate: target row unchanged
+    #   scd ==, upd !=  -> SCD1: business cols from u, keep
+    #                      t.dw_inserted_at / t.effective_from
+    #                      (reference merge excludes them, :38-41)
+    #   scd !=          -> SCD2: close t ('I', effective_to =
+    #                      u.effective_from) + new active version from u
+    matched = (
+        has_u
+        & has_t
+        & (tcol("record_status") == "A")
+        & tcol("effective_to").isNull()
     )
+    scd_same = tcol("scd_key").eqNullSafe(ucol("scd_key"))
+    scd2 = matched & ~scd_same
+    scd1 = matched & scd_same & ~tcol("upd_key").eqNullSafe(ucol("upd_key"))
+    insert = has_u & ~matched
 
-    new_state = historic.select(*out_cols).unionByName(primary).unionByName(scd2_new)
+    def target_row(c: str):
+        if c == "record_status":
+            return F.when(scd2, F.lit("I")).otherwise(tcol(c))
+        if c == "effective_to":
+            return F.when(scd2, ucol("effective_from")).otherwise(tcol(c))
+        if c == "dw_updated_at":
+            return F.when(scd1 | scd2, now_lit).otherwise(tcol(c))
+        if c in cfg.pk_cols or c in ("effective_from", "dw_inserted_at", cfg.surrogate_col):
+            return tcol(c)
+        return F.when(scd1, ucol(c)).otherwise(tcol(c))  # business + keys
+
+    def batch_row(c: str):
+        if c == "effective_from":
+            return F.when(insert, ucol("initial_effective_from")).otherwise(ucol(c))
+        return ucol(c)  # surrogate: null here, drawn from the HWM below
+
+    rows = F.array(
+        F.when(has_t, F.struct(*[target_row(c).alias(c) for c in out_cols])),
+        F.when(insert | scd2, F.struct(*[batch_row(c).alias(c) for c in out_cols])),
+    )
+    new_state = j.select(F.inline(F.array_compact(rows)))
     if cfg.surrogate_col:
         # Inserted rows (new entities + new SCD2 versions) carry null
         # keys at this point; fill them from the high-water mark,

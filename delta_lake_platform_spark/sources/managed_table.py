@@ -2756,6 +2756,19 @@ class ManagedTable:
                 # observe node sits above the checkpoint and below the
                 # batch/DV filters, so the sums cover every joined row
                 # exactly like the eager pass.
+                #
+                # Invariant: an Observation latches the metrics of the
+                # FIRST action that finishes over this node, so every
+                # action that can run on a frame built from ``flagged``
+                # before ``_write_data_staged`` must consume it fully.
+                # Today the only one is ``verify_constraints``'s
+                # ``isEmpty`` probe, which reads every partition when
+                # there is no violation and raises otherwise. An
+                # early-stopping action (take/show/limit) added on this
+                # path would latch partial sums into the commit's
+                # metrics and the log's running ``numOutputRows`` (which
+                # the SCD initial-load check trusts); a path that skips
+                # the write would leave ``counts_obs.get`` blocking.
                 from pyspark.sql import Observation
 
                 counts_obs = Observation()

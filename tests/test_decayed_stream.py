@@ -12,8 +12,9 @@ import pytest
 from delta_lake_platform_spark.operators.temporal import (
     decayed_agg_with_anchor,
 )
-from delta_lake_platform_spark.sources.managed_table import ManagedTable
+from delta_lake_platform_spark.sources.managed_table import ManagedTable, _json_stat
 from delta_lake_platform_spark.streaming.decayed import (
+    _state_anchor_us,
     decayed_maintain_stream,
 )
 
@@ -81,3 +82,36 @@ def test_streamed_state_equals_full_recompute_and_replay_noop(spark):
     assert state.latest_version() == v
     got2 = {r.user_id: r.decayed_sum for r in state.read().collect()}
     assert got2 == {k: got[k].decayed_sum for k in got}
+
+
+@pytest.mark.parametrize(
+    "anchor",
+    [
+        dt.datetime(2024, 1, 1),  # isoformat drops an all-zero fraction
+        dt.datetime(2024, 3, 5, 7, 8, 9, 1),
+        dt.datetime(2024, 12, 31, 23, 59, 59, 999999),
+        dt.datetime(1969, 12, 31, 23, 59, 59, 999999),
+        dt.datetime(2024, 6, 1, 12, 0, 0, 123456, tzinfo=dt.timezone.utc),
+        dt.datetime(
+            2024, 6, 1, 17, 30, 0, 654321,
+            tzinfo=dt.timezone(dt.timedelta(hours=5, minutes=30)),
+        ),
+    ],
+)
+def test_anchor_stat_round_trips_to_the_microsecond(anchor):
+    """The fold anchor is read back from the ISO string the footer-stats
+    writer (``_json_stat``) records for ``anchor_ts``; the round trip
+    must be exact to the microsecond, or folds decay from a skewed
+    anchor."""
+
+    class FooterStats:
+        def column_max(self, col, version):
+            assert col == "anchor_ts"
+            return _json_stat(anchor)
+
+        def read(self, version):
+            raise AssertionError("anchor fell back to a data scan")
+
+    utc = anchor.astimezone(dt.timezone.utc).replace(tzinfo=None) if anchor.tzinfo else anchor
+    want = (utc - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+    assert _state_anchor_us(FooterStats(), 0) == want

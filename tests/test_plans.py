@@ -8,6 +8,8 @@ pin that the delegation actually engages for our query shapes.)
 
 from __future__ import annotations
 
+import re
+
 import delta_lake_platform_spark.queries.all  # noqa: F401
 from delta_lake_platform_spark.plans import (
     count_exchanges,
@@ -454,3 +456,67 @@ def test_kcenter_round_is_single_scan_no_exchange(spark, sf_dir):
         ),
     )
     assert count_exchanges(state) == 0, count_exchanges(state)
+
+
+def test_scd_apply_is_one_window_one_join(spark, tmp_path, monkeypatch):
+    """A single-commit SCD apply builds its new state as one dataflow:
+    one row_number Window over the target, one full-outer PK join that
+    shares the target's exchange, one generator. No Union, and no
+    LogicalRDD/ExistingRDD scan (the mark of a localCheckpoint, whose
+    blocks outlive the commit). Repeated applies persist no RDDs."""
+    from datetime import datetime
+
+    from delta_lake_platform_spark.plans.introspect import explain_str
+    from delta_lake_platform_spark.scd import ScdConfig, apply_scd
+    from delta_lake_platform_spark.scd.engine import create_scd_target
+    from delta_lake_platform_spark.sources.managed_table import ManagedTable
+
+    def cfg(day, **kw):
+        return ScdConfig(
+            pk_cols=["id"], scd_cols=["v"], select_cols=["id", "v", "cat"],
+            clock=lambda: datetime(2026, 1, day), **kw,
+        )
+
+    def batch(values):  # a LocalRelation, so any RDD scan is the engine's
+        return spark.sql(
+            f"SELECT id, v, cat FROM VALUES {values} AS b(id, v, cat)"
+        )
+
+    table = ManagedTable(spark, str(tmp_path / "dim"))
+    first = batch("(1L, 0L, 'x'), (2L, 1L, 'y')")
+    create_scd_target(table, first, cfg(1))
+    apply_scd(first, table, cfg(1))
+
+    applied = []
+    overwrite = ManagedTable.overwrite
+
+    def spy(self, df, *a, **kw):
+        applied.append(df)
+        return overwrite(self, df, *a, **kw)
+
+    monkeypatch.setattr(ManagedTable, "overwrite", spy)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    before = set(persisted.keySet().toArray())
+    apply_scd(
+        batch("(1L, 1L, 'x'), (2L, 1L, 'z'), (3L, 0L, 'q')"), table,
+        cfg(2, dedupe_batch=False),
+    )
+    apply_scd(batch("(1L, 2L, 'x'), (4L, 0L, 'w')"), table, cfg(3))
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    assert after <= before, f"applies left persisted RDDs {after - before}"
+
+    plan = explain_str(applied[0])
+    assert len(re.findall(r"^\(\d+\) Window\s*$", plan, flags=re.M)) == 1, plan
+    assert len(re.findall(r"^\(\d+\) \w*Join\b", plan, flags=re.M)) == 1, plan
+    assert "Generate" in plan and "Union" not in plan, plan
+    logical = explain_str(applied[0], mode="extended")
+    assert "LogicalRDD" not in logical and "ExistingRDD" not in logical
+    # With the default batch dedupe (its own window over the batch by
+    # PK), each side is still hashed by PK exactly once.
+    assert count_exchanges(applied[1]) == 2, explain_str(applied[1])
+    assert sorted(
+        (r.id, r.v, r.record_status) for r in table.read().collect()
+    ) == [
+        (1, 0, "I"), (1, 1, "I"), (1, 2, "A"), (2, 1, "A"), (3, 0, "A"),
+        (4, 0, "A"),
+    ]

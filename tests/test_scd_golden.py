@@ -221,3 +221,66 @@ def test_apply_rejects_type_drifted_batch(spark):
     # Table untouched: schema and row count intact.
     assert dict(t.read().dtypes)["units"] == "bigint"
     shutil.rmtree(d, ignore_errors=True)
+
+
+def test_reload_with_new_timestamps_is_a_noop(spark):
+    """With ``select_cols`` unset every batch column is stored, but the
+    load-timestamp columns must not feed ``upd_key``: a full reload
+    whose only change is its timestamps makes no SCD1 update and an
+    empty change feed."""
+    cfg = ScdConfig(
+        pk_cols=["id", "stock_name"],
+        scd_cols=["units"],
+        effective_from_col="last_modify_ts",
+        initial_eff_date_col="reg_ts",
+        clock=lambda: CLOCKS[1],
+    )
+    d = tempfile.mkdtemp(prefix="scd_reload_")
+    try:
+        t = ManagedTable(spark, f"{d}/tbl")
+        df1 = spark.createDataFrame(DAY1, SCHEMA)
+        create_scd_target(t, df1, cfg)
+        apply_scd(df1, t, cfg)
+        v1 = t.latest_version()
+        snap1 = sorted(map(tuple, t.read().collect()))
+        restamped = [
+            (*r[:4], "2016-01-01 00:00:00", "2025-06-01 00:00:00") for r in DAY1
+        ]
+        cfg.clock = lambda: CLOCKS[2]
+        apply_scd(spark.createDataFrame(restamped, SCHEMA), t, cfg)
+        assert sorted(map(tuple, t.read().collect())) == snap1
+        assert t.change_feed(v1, t.latest_version()).isEmpty()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_soft_closed_key_reapplied(spark):
+    """A key soft-closed by ``scd_soft_close`` (status 'D') has no open
+    version, so a later batch carrying it inserts a fresh active row at
+    ``initial_effective_from`` and leaves its history rows untouched;
+    both execution modes agree on that re-apply."""
+    from delta_lake_platform_spark.scd.engine import scd_soft_close
+
+    results = {}
+    for mode in ("single_commit", "two_merge"):
+        d = tempfile.mkdtemp(prefix=f"scd_reopen_{mode}_")
+        try:
+            t = ManagedTable(spark, f"{d}/tbl")
+            create_scd_target(t, spark.createDataFrame(DAY1, SCHEMA), _cfg(1))
+            _run_day(spark, t, 1, DAY1, "single_commit")
+            keys = spark.createDataFrame([(1, "BTC")], "id long, stock_name string")
+            scd_soft_close(keys, t, _cfg(1), now=datetime(2025, 5, 11, 18, 0, 0))
+            closed = [tuple(r) for r in t.read().filter("stock_name = 'BTC'").collect()]
+            assert [r[4] for r in closed] == ["D"]  # record_status
+            _run_day(spark, t, 2, DAY2, mode)
+            btc = t.read().filter("stock_name = 'BTC'").collect()
+            fresh = [r for r in btc if r.record_status == "A"]
+            assert len(btc) == 2 and len(fresh) == 1
+            assert fresh[0].effective_to is None and fresh[0].units == 171
+            assert str(fresh[0].effective_from) == "2016-12-25 11:05:30"
+            assert fresh[0].dw_inserted_at == CLOCKS[2]
+            assert [tuple(r) for r in btc if r.record_status != "A"] == closed
+            results[mode] = sorted(map(tuple, t.read().collect()))
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
+    assert results["single_commit"] == results["two_merge"]
